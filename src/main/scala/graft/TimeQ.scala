@@ -1,34 +1,58 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+
+/** Solo-times named queries: warm run, `Broadcasts.release`, timed run,
+  * release — so each number is a full cold-cache per-query cost. Prints
+  * one line per query with the timed run's job structure:
+  * `TIMEQ <name> <secs> s jobs=J stages=S tasks=T task_s=X`, where
+  * stages counts the stages that ran (skipped ones never complete) and
+  * task_s sums their executor run time.
+  * `runMain graft.TimeQ <sfDir> <query> [query...]` */
 object TimeQ {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("wh").toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = Sessions.get("graft-timeq")
     Land.root = "/tmp/graft_timeq_land"
     // TimeQ is a TIMING surface (Bench's fresh-JVM re-timer and the ×10
     // scale probes): same gate mode as Bench so sf0.1 and sf1 numbers
     // are always comparable. SPARK_GRAFT_GATES=on restores gate-priced
     // timing (and propagates into Bench's forked TimeQ children).
     Gates.configureForTiming()
+
+    val jobs, stages, tasks, taskMs = new java.util.concurrent.atomic.AtomicLong()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        stages.incrementAndGet()
+        tasks.addAndGet(e.stageInfo.numTasks)
+        taskMs.addAndGet(e.stageInfo.taskMetrics.executorRunTime)
+      }
+    })
+    // Listener events arrive asynchronously; draining the bus before the
+    // counters reset and before they are read attributes exactly the
+    // timed run's jobs to it. (`listenerBus` is Spark-internal, hence
+    // the reflective call.)
+    def drain(): Unit = {
+      val bus = spark.sparkContext.getClass.getMethod("listenerBus")
+        .invoke(spark.sparkContext)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+
     for (name <- args.tail) {
       SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save() // warm
-      graft.operators.Broadcasts.release(spark) // same per-query discipline as Bench:
-      val t0 = System.nanoTime()               // earlier queries' persisted frames must
-      SparkEntry.queries(name)(spark, dir)     // not evict/spill against the timed one
+      // same per-query discipline as Bench: earlier queries' persisted
+      // frames must not evict/spill against the timed one
+      graft.operators.Broadcasts.release(spark)
+      drain()
+      Seq(jobs, stages, tasks, taskMs).foreach(_.set(0))
+      val t0 = System.nanoTime()
+      SparkEntry.queries(name)(spark, dir)
         .write.format("noop").mode("overwrite").save()
-      println(f"TIMEQ $name ${(System.nanoTime()-t0)/1e9}%.2f s")
+      val secs = (System.nanoTime() - t0) / 1e9
+      drain()
+      println(f"TIMEQ $name $secs%.2f s jobs=${jobs.get} stages=${stages.get} " +
+        f"tasks=${tasks.get} task_s=${taskMs.get / 1000.0}%.2f")
       graft.operators.Broadcasts.release(spark)
     }
     spark.stop()

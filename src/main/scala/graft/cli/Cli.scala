@@ -76,7 +76,7 @@ object Cli {
     require(args.nonEmpty, usage)
     val verb = args.head
     val opts = parseFlags(args.tail)
-    val spark = session()
+    val spark = graft.Sessions.get("graft-cli", master = sys.env.get("SPARK_MASTER"))
     try run(spark, verb, opts)
     finally spark.stop()
   }
@@ -96,18 +96,6 @@ object Cli {
     }
     m.toMap
   }
-
-  private def session(): SparkSession =
-    SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
 
   /** Dispatch one verb (exposed for tests; throws on bad input). */
   def run(spark: SparkSession, verb: String, o: Map[String, String]): Unit = verb match {

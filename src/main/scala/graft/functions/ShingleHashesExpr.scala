@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * skinny sh_h count rests on), WITHOUT materializing a string array
   * through interpreted higher-order functions: the zip_with shingle
   * chain measured ~14 s over the ×10 corpus where this kernel is a
-  * sub-second scan (ProbeWinnow, r12). Fewer than n tokens → empty
+  * sub-second scan (winnowing probe, r12). Fewer than n tokens → empty
   * array. The dedup-family verify stage (minhash/winnowing) is the
   * consumer; candidates intersect these long arrays. */
 case class ShingleHashesExpr(child: Expression, n: Int)

@@ -77,7 +77,7 @@ object Dedup {
     * arrays through its shuffle. */
   /** Exact shingle-Jaccard verification of candidate (i, j) pairs, the
     * dedup family's shared tail — rebuilt around three measured wins
-    * (ProbeWinnow, ×10 corpus, 4.7M winnowing candidates, r12):
+    * (winnowing probe, ×10 corpus, 4.7M winnowing candidates, r12):
     *   - COMPILED hashed shingles (ShingleHashesExpr) instead of the
     *     interpreted zip_with string-shingle chain (~14 s → sub-second
     *     scan) — long surrogates also make array_intersect several
@@ -193,18 +193,12 @@ object Dedup {
 
   /** Winnowing (bucket, id) postings — the fingerprint IS the bucket
     * key; factored out so candidate volume is measurable (ScalingSpec). */
-  /** Probe-visible alias of [[winnowingPostings]] (profiling main). */
-  def winnowingPostingsProbe(df: DataFrame, idCol: String, textCol: String,
-                             k: Int = 24, w: Int = 8): DataFrame =
-    winnowingPostings(df, idCol, textCol, k, w)
-
   private[pipeline] def winnowingPostings(df: DataFrame, idCol: String,
                                           textCol: String, k: Int = 24,
                                           w: Int = 8): DataFrame =
     df.select(col(idCol).as("id"),
       explode(TextOps.winnowingFingerprints(col(textCol), k, w)).as("bkt"))
 
-  /** Shingled (id, sh) projection shared by the Jaccard family. */
   /** EXACT shingle-Jaccard pairs of a broadcast id-prefix probe against
     * the whole corpus — linear in the corpus, so it runs at ANY scale.
     * This is the truth set behind the dfCap'd [[ngramJaccardPairs]]'s
@@ -254,6 +248,7 @@ object Dedup {
       .select("probe_id", "corpus_id")
   }
 
+  /** Shingled (id, sh) projection shared by the Jaccard family. */
   private[pipeline] def shingled(df: DataFrame, idCol: String, textCol: String,
                                  shingleN: Int = 3): DataFrame =
     df.select(col(idCol).as("id"),
@@ -263,7 +258,7 @@ object Dedup {
   /** The COMPILED hashed twin of [[shingled]]: (id, shh array<long>) of
     * distinct shingle-hash surrogates straight from ShingleHashesExpr —
     * no interpreted zip_with string chain, no separate xxhash64 pass
-    * (~14 s → sub-second over the ×10 corpus, ProbeWinnow r12). Every
+    * (~14 s → sub-second over the ×10 corpus, winnowing probe r12). Every
     * consumer that needs only shingle IDENTITY (postings co-occurrence,
     * sizes, intersections) reads this; [[shingled]] remains for the
     * minhash signature path, whose landed indexes pin the string-keyed
@@ -292,7 +287,7 @@ object Dedup {
     * the SAME scale knob as [[ngramJaccardPairs]]' shingle dfCap, for
     * the same reason: a boilerplate 31-char run shared by a corpus-scale
     * crowd generates quadratic candidates and carries no dedup signal.
-    * Measured at the ×10 probe (r12, ProbeWinnow on the density-fixed
+    * Measured at the ×10 probe (r12, a winnowing probe on the density-fixed
     * sf1 corpus): 9 fingerprints with df > 1000 carried 70% of the
     * 2.0·10⁷ candidate volume; the cap keeps 99.6% of postings and cuts
     * candidates to 6.0·10⁶. A capped-away candidate costs recall ONLY

@@ -74,7 +74,7 @@ class ScalingSpec extends SparkSpec {
 
   test("winnowing dfCap (p13, r12): hot-fingerprint boilerplate is quadratic " +
       "uncapped; the cap restores linearity and loses no true pair") {
-    // the failure mode ProbeWinnow measured at x10 (9 fingerprints with
+    // the failure mode a winnowing probe measured at x10 (9 fingerprints with
     // df > 1000 carried 70% of 2e7 candidates): a shared >=31-char
     // boilerplate RUN gives every doc the same fingerprint, df = n.
     // Each doc also gets its own near-dup partner via a repeated body
@@ -227,8 +227,8 @@ class ScalingSpec extends SparkSpec {
     val cells1 = 16
     val cells2 = math.max((cells1 * n2 / n1).toInt, cells1)
     assertLinear("semdedup(p29)", 1.5, n1,
-      candVolume(Ann.kmeansCells(eS, cells1, seed = 1), "cell"), n2,
-      candVolume(Ann.kmeansCells(eL, cells2, seed = 1), "cell"))
+      candVolume(Ann.kmeansCells(eS, cells1), "cell"), n2,
+      candVolume(Ann.kmeansCells(eL, cells2), "cell"))
   }
 
   test("dup-span profile (p30) posting volume is linear by construction") {
